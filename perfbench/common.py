@@ -1,5 +1,6 @@
-"""Pieces the three workloads share: the operation record, cache clearing,
-directory sizes and order-insensitive row comparison."""
+"""Pieces the workloads share: the operation record, the CPU clock of the
+process tree, cache clearing, directory sizes, the report file name and
+order-insensitive row comparison."""
 
 from __future__ import annotations
 
@@ -8,18 +9,67 @@ import hashlib
 import math
 import os
 import sys
+import time
 import traceback
 from dataclasses import dataclass
 from decimal import Decimal
 
 
+REPORT_NAME = "perfbench-report-{workload}-{seed}-{kind}.json"
+
+
 @dataclass
 class Op:
-    """One timed operation: an expansion batch, a request or a registry query."""
+    """One timed operation: an expansion batch, a request or a registry query.
+    `cpu_s` is the process tree's CPU time over the same window."""
     kind: str
     seconds: float
+    cpu_s: float = 0.0
     ok: bool = True
     rows: int = 0
+
+
+class Timer:
+    """Wall and tree-CPU clocks started together; `stop()` returns the
+    (wall, cpu) seconds since the start."""
+
+    def __init__(self):
+        self.c0 = tree_cpu_s()
+        self.t0 = time.perf_counter()
+
+    def stop(self) -> tuple[float, float]:
+        wall = time.perf_counter() - self.t0
+        return wall, tree_cpu_s() - self.c0
+
+
+def descendants() -> list[int]:
+    """Pids of every live descendant of this process."""
+    me, parent = os.getpid(), {}
+    for p in os.listdir("/proc"):
+        if p.isdigit():
+            try:
+                with open(f"/proc/{p}/stat") as f:
+                    parent[int(p)] = int(f.read().rsplit(")", 1)[1].split()[1])
+            except (OSError, IndexError, ValueError):
+                pass
+    tree, frontier = [], [me]
+    while frontier:
+        frontier = [c for c, pp in parent.items() if pp in frontier]
+        tree += frontier
+    return tree
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and its descendants (the JVM,
+    the Python workers and, through cutime/cstime, their reaped children)."""
+    ticks = 0
+    for pid in [os.getpid()] + descendants():
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                ticks += sum(int(x) for x in f.read().rsplit(")", 1)[1].split()[11:15])
+        except (OSError, ValueError):
+            pass
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def record_failure(failures: list[str], what: str, e: Exception) -> None:

@@ -222,15 +222,21 @@ _WORDS = ("batch part spark line column order small sort fast value scan a hash 
 
 def _documents(rng, n: int) -> pa.Table:
     doc_id = np.arange(n, dtype=np.int64)
-    texts = []
+    texts, originals = [], []
     for i in range(n):
-        if i >= 20 and rng.random() < 0.03:
-            # near copy of an earlier document: the dedup queries' signal
-            src = texts[int(rng.integers(0, i))].split()
+        if i >= 20 and i % 25 == 0:
+            # near copy of an earlier original with one word changed: the
+            # dedup queries' signal. Every seed gets the same number of
+            # copies, each of a document long enough (60+ words) that the
+            # LSH bands find nearly every pair, so the dedup work does not
+            # swing from seed to seed.
+            long_ = [k for k in originals if len(texts[k].split()) >= 60] or originals
+            src = texts[int(rng.choice(long_))].split()
             j = int(rng.integers(0, len(src)))
             src[j] = str(rng.choice(_WORDS))
             texts.append(" ".join(src))
         else:
+            originals.append(i)
             texts.append(" ".join(rng.choice(_WORDS, size=int(rng.integers(8, 90)))))
     langs = rng.choice(["en", "en", "en", "de", "fr", "es", "zh"], size=n)
     return pa.table({

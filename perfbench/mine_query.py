@@ -20,13 +20,12 @@ from __future__ import annotations
 
 import os
 import statistics
-import time
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from perfbench import gen
-from perfbench.common import Op, clear_caches, record_failure, row_set
+from perfbench.common import Op, Timer, clear_caches, record_failure, row_set
 
 CYCLE = ("mass", "ms2", "prov", "path")
 N_PEAKS = 10
@@ -141,18 +140,18 @@ class MineQuery:
         for kind in self.cycle:
             k = self.n_req  # parameter sets rotate with the request number
             tr.rid = f"req{self.n_req}"
-            t0 = time.perf_counter()
+            clock = Timer()
             try:
                 with tr.span(f"request.{kind}"):
                     rows = getattr(self, "_" + kind)(tr, k)
-                op = Op(kind, time.perf_counter() - t0, rows=len(rows))
+                op = Op(kind, *clock.stop(), rows=len(rows))
                 if not rows:
                     op.ok = False
                     self.failures.append(f"{kind} request {self.n_req} returned no rows")
                 elif kind in ("mass", "prov"):
                     self.answers.append((kind, k, rows, op))
             except Exception as e:  # noqa: BLE001
-                op = Op(kind, time.perf_counter() - t0, ok=False)
+                op = Op(kind, *clock.stop(), ok=False)
                 record_failure(self.failures, f"{kind} request {self.n_req}", e)
             ops.append(op)
             self.n_req += 1

@@ -2,7 +2,7 @@
 
 One pass builds each query's DataFrame (plan build, including any eager
 jobs the query runs while building) and sinks it to the `noop` format. The
-warm-up is one such pass. After the measured passes one more pass collects
+warm-up is two such passes. After the measured passes one more pass collects
 the rows, untimed, and each query's answer is checked against its DuckDB
 oracle evaluated on the same sampled tables.
 """
@@ -10,11 +10,9 @@ oracle evaluated on the same sampled tables.
 from __future__ import annotations
 
 import os
-import time
-
 
 from perfbench import gen
-from perfbench.common import Op, clear_caches, record_failure, row_set
+from perfbench.common import Op, Timer, clear_caches, record_failure, row_set
 from perfbench.trace import Tracer
 
 # (query, why it is in the mix)
@@ -30,6 +28,7 @@ REGISTRY_QUERIES = {
     "pii_scan": "zero-shuffle control",
 }
 SAMPLE_FRACTION = 0.02
+WARMUP_PASSES = 2
 ORACLE_TABLES = ("documents", "lineitem", "embeddings", "events")
 
 
@@ -54,23 +53,27 @@ class RegistryMix:
         ops = []
         for q in self.queries:
             tr.rid = f"{q}#{self.n_pass}"
-            t0 = time.perf_counter()
+            clock = Timer()
             try:
                 with tr.span(f"registry.{q}"):
                     with tr.span(f"registry.{q}.build"):
                         df = QUERIES[q](self.spark, self.sf_dir)
                     with tr.span(f"registry.{q}.exec"):
                         sink(q, df)
-                ops.append(Op(q, time.perf_counter() - t0))
+                ops.append(Op(q, *clock.stop()))
             except Exception as e:  # noqa: BLE001
                 record_failure(self.failures, q, e)
-                ops.append(Op(q, time.perf_counter() - t0, ok=False))
+                ops.append(Op(q, *clock.stop(), ok=False))
             clear_caches(self.spark)
         self.n_pass += 1
         return ops
 
     def warmup(self, off) -> None:
-        self.run_pass(off)
+        # after one warm-up pass the JIT is still at work: dup_clusters'
+        # CPU time fell by a third from the first measured pass to the
+        # second, so a run's median depended on how many passes fitted
+        for _ in range(WARMUP_PASSES):
+            self.run_pass(off)
 
     def run_pass(self, tr) -> list[Op]:
         return self._run(tr, lambda q, df: df.write.format("noop").mode("overwrite").save())

@@ -34,6 +34,10 @@ import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from perfbench.common import REPORT_NAME, descendants  # noqa: E402
+
 WORKLOADS = ("pickaxe_expand", "query_mix", "mine_query", "registry_mix")
 
 
@@ -71,7 +75,7 @@ class RssSampler(threading.Thread):
     @staticmethod
     def _tree_rss_kb() -> int:
         total = 0
-        for pid in [os.getpid()] + _descendants():
+        for pid in [os.getpid()] + descendants():
             try:
                 with open(f"/proc/{pid}/status") as f:
                     total += next((int(l.split()[1]) for l in f if l.startswith("VmRSS:")), 0)
@@ -87,35 +91,6 @@ class RssSampler(threading.Thread):
         self._stop_evt.set()
         self.join()
         return max(self.peak_kb, self._tree_rss_kb()) / 1024.0
-
-
-def _descendants() -> list[int]:
-    me, parent = os.getpid(), {}
-    for p in os.listdir("/proc"):
-        if p.isdigit():
-            try:
-                with open(f"/proc/{p}/stat") as f:
-                    parent[int(p)] = int(f.read().rsplit(")", 1)[1].split()[1])
-            except (OSError, IndexError, ValueError):
-                pass
-    tree, frontier = [], [me]
-    while frontier:
-        frontier = [c for c, pp in parent.items() if pp in frontier]
-        tree += frontier
-    return tree
-
-
-def tree_cpu_s() -> float:
-    """CPU seconds used so far by this process and its descendants (the JVM,
-    the Python workers and, through cutime/cstime, their reaped children)."""
-    ticks = 0
-    for pid in [os.getpid()] + _descendants():
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                ticks += sum(int(x) for x in f.read().rsplit(")", 1)[1].split()[11:15])
-        except (OSError, ValueError):
-            pass
-    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def stop_spark(spark) -> None:
@@ -138,13 +113,13 @@ def stop_spark(spark) -> None:
                 proc.wait()
     for sig in (None, signal.SIGKILL):
         if sig is not None:
-            for pid in _descendants():
+            for pid in descendants():
                 try:
                     os.kill(pid, sig)
                 except OSError:
                     pass
         deadline = time.time() + 30
-        while _descendants() and time.time() < deadline:
+        while descendants() and time.time() < deadline:
             time.sleep(0.2)
 
 
@@ -168,14 +143,15 @@ def make_workload(name: str, spark, seed: int, work: str):
 
 def measure(wl, tracer, seconds: float) -> tuple[list, list[float], list[float]]:
     """Passes until `seconds` of timed work (at least one pass); returns the
-    ops, each pass's timed seconds and each pass's CPU seconds."""
+    ops, each pass's timed seconds and each pass's CPU seconds. Both sum
+    the ops' own windows, so answer checks and cache clearing between
+    operations are not counted."""
     ops, passes, cpu = [], [], []
     while not passes or sum(passes) < seconds:
-        c0 = tree_cpu_s()
         p = wl.run_pass(tracer)
-        cpu.append(tree_cpu_s() - c0)
         ops += p
         passes.append(sum(o.seconds for o in p))
+        cpu.append(sum(o.cpu_s for o in p))
         tracer.collect_stage_rows()
     return ops, passes, cpu
 
@@ -191,7 +167,6 @@ def main(argv=None) -> int:
     if not os.path.isfile(os.path.join(ROOT, "mine_database_spark", "session.py")):
         print(f"perfbench: no mine_database_spark package under {ROOT}", file=sys.stderr)
         return 2
-    sys.path.insert(0, ROOT)
     base = os.path.join(ROOT, ".perfbench_work")
     work = os.path.join(base, f"{args.workload}-{args.seed}-{os.getpid()}")
     host = host_env(work)
@@ -239,9 +214,10 @@ def main(argv=None) -> int:
             "peak_rss_mb": (peak_rss_mb, "MB"),
         }
         # printed and reported, not gated: wall time swings with the host's
-        # neighbours (the CPU seconds above do not count stolen time), a run
-        # holds too few requests for steady percentiles, and the rest exist
-        # on one workload only
+        # neighbours (the CPU seconds above do not count stolen time), so a
+        # change that only loses parallelism or adds driver waits passes the
+        # gate and shows here; a run holds too few requests for steady
+        # percentiles, and the rest exist on one workload only
         scoped = {"run_s": (run_s, "s"), "failed_frac": (failed / attempted, "fraction"),
                   "requests": (len(lat), "count"),
                   "req_per_s": (len(ops) / sum(passes), "1/s"),
@@ -252,7 +228,7 @@ def main(argv=None) -> int:
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
             "host": {**host, "loadavg_1m": load1, "loadavg_5m": load5},
             "inputs": sizes, "boot_s": boot_s, "passes": passes,
-            "ops": [(o.kind, o.seconds, o.ok, o.rows) for o in ops],
+            "ops": [(o.kind, o.seconds, o.cpu_s, o.ok, o.rows) for o in ops],
             "end_to_end": {k: {"value": v, "unit": u} for k, (v, u) in {**e2e, **scoped}.items()},
             "failures": failures,
             "notes": getattr(wl, "notes", {}),
@@ -268,7 +244,8 @@ def main(argv=None) -> int:
         else:
             metrics = e2e
         os.makedirs(base, exist_ok=True)
-        path = os.path.join(base, f"perfbench-report-{args.workload}-{args.seed}-{'traced' if args.trace else 'plain'}.json")
+        path = os.path.join(base, REPORT_NAME.format(
+            workload=args.workload, seed=args.seed, kind="traced" if args.trace else "plain"))
         with open(path, "w") as f:
             json.dump(report, f, indent=1, default=str)
         print(f"# {args.workload} seed={args.seed} nproc={host['nproc']} "
