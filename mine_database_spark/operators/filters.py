@@ -9,10 +9,18 @@ Contract (mirrors base_filter.py:163-286 semantics):
     (compounds referenced by surviving reactions are rescued), and finally
     orphaned predicted compounds, to fixpoint.
 
-Everything is joins/aggregations — no driver-side worklists. The fixpoint
-loop is bounded by generation depth (SURVEY §7.4). Chemistry-valued
-predicates (MW, fingerprints) run as pandas UDFs; the decision logic stays
-in Catalyst.
+Everything is joins/aggregations — no driver-side worklists. The orphan
+loop runs to fixpoint like the reference's; it terminates because every
+round removes at least one compound. Chemistry-valued predicates (MW,
+fingerprints) run as pandas UDFs; the decision logic stays in Catalyst.
+
+Materialization contract: each scoring UDF runs once per filter step, and
+the `apply` of every scoring filter returns checkpointed frames (or its
+inputs unchanged when it has nothing to decide). The decisions (for
+reaction-scoped filters, the dead-reaction set) are checkpointed before
+any emptiness probe, and orphan_gc checkpoints its inputs and each round's
+orphan set. Otherwise the lazy cascade would be replanned, UDF included,
+by every probe here and by every job of the next filter in the chain.
 """
 
 from __future__ import annotations
@@ -68,17 +76,19 @@ def cascade_remove(compounds: DataFrame, reactions: DataFrame, checked_ids: Data
     return orphan_gc(compounds_out, reactions_out)
 
 
-def orphan_gc(compounds: DataFrame, reactions: DataFrame, max_rounds: int = 10) -> tuple[DataFrame, DataFrame]:
-    """Iterative orphan removal to fixpoint (bounded by generation depth):
-    a predicted compound with no producing reaction is deleted, along with
-    reactions it was a reactant of — which can orphan more compounds."""
-    for _ in range(max_rounds):
+def orphan_gc(compounds: DataFrame, reactions: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Iterative orphan removal to fixpoint: a predicted compound with no
+    producing reaction is deleted, along with reactions it was a reactant
+    of — which can orphan more compounds. Returns checkpointed frames."""
+    compounds, reactions = compounds.localCheckpoint(eager=True), reactions.localCheckpoint(eager=True)
+    while True:
         edges = edge_table(reactions)
         produced = edges.where(F.col("role") == "product").select(F.col("c_id").alias("_id")).distinct()
         orphans = (
             compounds.where(F.col("type") == "Predicted")
             .join(produced, "_id", "left_anti")
             .select("_id")
+            .localCheckpoint(eager=True)
         )
         if orphans.isEmpty():
             return compounds, reactions
@@ -92,7 +102,6 @@ def orphan_gc(compounds: DataFrame, reactions: DataFrame, max_rounds: int = 10) 
         reactions = reactions.join(dead_rxns, reactions["_id"] == dead_rxns["rxn_id"], "left_anti").localCheckpoint(
             eager=True
         )
-    return compounds, reactions
 
 
 # ---------------------------------------------------------------------------
@@ -116,7 +125,7 @@ class BaseFilter:
         cands = self.candidates(compounds, generation)
         if cands.isEmpty():
             return compounds, reactions
-        decisions = self.choose(cands, generation)
+        decisions = self.choose(cands, generation).localCheckpoint(eager=True)
         ann_cols = [c for c in decisions.columns if c not in ("_id", "keep")]
         dec = decisions.select("_id", "keep", *ann_cols)
         compounds = (

@@ -117,7 +117,12 @@ class ReactionScopedFilter(BaseFilter):
 
     def apply(self, compounds: DataFrame, reactions: DataFrame, generation: int):
         scoped = self.reactions_to_check(compounds, reactions, generation)
-        dead = self.choose_reactions(scoped, compounds).where(~F.col("keep")).select("rxn_id")
+        dead = (
+            self.choose_reactions(scoped, compounds)
+            .where(~F.col("keep"))
+            .select("rxn_id")
+            .localCheckpoint(eager=True)
+        )
         if dead.isEmpty():
             return compounds, reactions
         reactions = reactions.join(dead, reactions["_id"] == dead["rxn_id"], "left_anti")

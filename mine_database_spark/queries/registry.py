@@ -6006,88 +6006,12 @@ FROM orders"""
 # by rotation.gate_order regardless of their last green round. UPDATE THIS
 # EVERY ROUND alongside code changes; tests/test_oracle_parity.py asserts
 # the dict order below matches gate_order(list(QUERIES), history, GATE_TOUCHED).
-GATE_TOUCHED: tuple[str, ...] = (
-    # r16 OPTIMIZATION-round rewrites (values identical, plans changed —
-    # forced into the gate so the driver re-proves each one):
-    # - the co_occurrence_edges posting-list derivation (collect_set +
-    #   pair explode replaces distinct → self-join → distinct) feeds the
-    #   six graph queries below, and the same recipe rebuilt the
-    #   k_core/k_truss weighted pair build (_copurchase_pair_weights);
-    #   k_core additionally opts into broadcast_keep
-    "pagerank", "label_propagation", "triangle_count",
-    "triangle_count_deg", "adamic_adar", "degree_distribution",
-    "k_core", "k_truss",
-    # - ngram_jaccard_pairs generates pairs from per-shingle posting
-    #   lists (persisted postings replace the raw shingle cache); the
-    #   minhash tier's lsh_candidate_pairs got the same shape
-    "ngram_jaccard", "ngram_jaccard_capped", "text_knn",
-    "minhash_estimate", "minhash_lsh", "dup_clusters",
-    "keep_best_dedup", "binary_neardup",
-    # - the sign-LSH tier explodes candidates from band-bucket postings
-    #   (embed/knn + both candidate-fraction audits); knn_graph_lsh also
-    #   scores each unordered pair once and mirrors after the rescore
-    "embed_neardup_lsh", "knn_graph_lsh", "lsh_candidate_fraction",
-    "ivf_candidate_fraction",
-    # - lang_id_model extracts grams via the mapInArrow numpy batch
-    #   extractor and drops the shared-table persist
-    "lang_id_model",
-)
+GATE_TOUCHED: tuple[str, ...] = ()
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- gate (positions 0-49; the driver hashes these) ---
     # order generated by `python -m mine_database_spark.queries.rotation`
     # (never-green first, then GATE_TOUCHED, then stalest last-green round)
-    "minhash_lsh": q_minhash_lsh,  # TOUCHED
-    "dup_clusters": q_dup_clusters,  # TOUCHED
-    "ngram_jaccard_capped": q_ngram_jaccard_capped,  # TOUCHED
-    "degree_distribution": q_degree_distribution,  # TOUCHED
-    "ivf_candidate_fraction": q_ivf_candidate_fraction,  # TOUCHED
-    "k_core": q_k_core,  # TOUCHED
-    "ngram_jaccard": q_ngram_jaccard,  # TOUCHED
-    "embed_neardup_lsh": q_embed_neardup_lsh,  # TOUCHED
-    "label_propagation": q_label_propagation,  # TOUCHED
-    "knn_graph_lsh": q_knn_graph_lsh,  # TOUCHED
-    "pagerank": q_pagerank,  # TOUCHED
-    "lang_id_model": q_lang_id_model,  # TOUCHED
-    "lsh_candidate_fraction": q_lsh_candidate_fraction,  # TOUCHED
-    "k_truss": q_k_truss,  # TOUCHED
-    "binary_neardup": q_binary_neardup,  # TOUCHED
-    "triangle_count_deg": q_triangle_count_deg,  # TOUCHED
-    "adamic_adar": q_adamic_adar,  # TOUCHED
-    "text_knn": q_text_knn,  # TOUCHED
-    "keep_best_dedup": q_keep_best_dedup,  # TOUCHED
-    "minhash_estimate": q_minhash_estimate,  # TOUCHED
-    "triangle_count": q_triangle_count,  # TOUCHED
-    "bit_prevalence": q_bit_prevalence,  # r12
-    "repetition_stats": q_repetition_stats,  # r12
-    "quality_rules": q_quality_rules,  # r12
-    "pii_scan": q_pii_scan,  # r12
-    "ann_ivf_topk": q_ann_ivf_topk,  # r12
-    "embed_neardup": q_embed_neardup,  # r12
-    "binary_dedup": q_binary_dedup,  # r13
-    "binary_profile": q_binary_profile,  # r13
-    "span_decontaminate": q_span_decontaminate,  # r13
-    "novelty_curve": q_novelty_curve,  # r13
-    "span_scrub": q_span_scrub,  # r13
-    "fuzzy_contamination": q_fuzzy_contamination,  # r13
-    "doc_chunks": q_doc_chunks,  # r13
-    "pack_sequences": q_pack_sequences,  # r13
-    "domain_mixture_sample": q_domain_mixture_sample,  # r13
-    "incremental_dedup": q_incremental_dedup,  # r13
-    "quality_classifier": q_quality_classifier,  # r13
-    "corpus_stats": q_corpus_stats,  # r13
-    "dataset_split": q_dataset_split,  # r13
-    "packed_texts": q_packed_texts,  # r13
-    "dedup_exact": q_dedup_exact,  # r13
-    "simhash": q_simhash,  # r13
-    "text_quality": q_text_quality,  # r13
-    "token_stats": q_token_stats,  # r13
-    "lang_id": q_lang_id,  # r13
-    "vocab_oov": q_vocab_oov,  # r13
-    "url_stats": q_url_stats,  # r13
-    "winnow_fingerprints": q_winnow_fingerprints,  # r13
-    "bloom_decontaminate": q_bloom_decontaminate,  # r13
-    # --- tail (locally parity-tested + benched every round; rotates back in) ---
     "blocklist_filter": q_blocklist_filter,  # r13
     "key_skew": q_key_skew,  # r13
     "funnel": q_funnel,  # r13
@@ -6138,6 +6062,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "provenance_score": q_provenance_score,  # r14
     "weighted_sample": q_weighted_sample,  # r14
     "topk_per_group": q_topk_per_group,  # r14
+    # --- tail (locally parity-tested + benched every round; rotates back in) ---
     "unigram_logprob": q_unigram_logprob,  # r14
     "bigram_logprob": q_bigram_logprob,  # r14
     "snapshot_diff": q_snapshot_diff,  # r14
@@ -6181,6 +6106,56 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "adduct_search": q_adduct_search,  # r15
     "product_of_native": q_product_of_native,  # r15
     "quiet_customers": q_quiet_customers,  # r15
+    "minhash_lsh": q_minhash_lsh,  # r16
+    "dup_clusters": q_dup_clusters,  # r16
+    "ngram_jaccard_capped": q_ngram_jaccard_capped,  # r16
+    "degree_distribution": q_degree_distribution,  # r16
+    "ivf_candidate_fraction": q_ivf_candidate_fraction,  # r16
+    "k_core": q_k_core,  # r16
+    "ngram_jaccard": q_ngram_jaccard,  # r16
+    "embed_neardup_lsh": q_embed_neardup_lsh,  # r16
+    "label_propagation": q_label_propagation,  # r16
+    "knn_graph_lsh": q_knn_graph_lsh,  # r16
+    "pagerank": q_pagerank,  # r16
+    "lang_id_model": q_lang_id_model,  # r16
+    "lsh_candidate_fraction": q_lsh_candidate_fraction,  # r16
+    "k_truss": q_k_truss,  # r16
+    "binary_neardup": q_binary_neardup,  # r16
+    "triangle_count_deg": q_triangle_count_deg,  # r16
+    "adamic_adar": q_adamic_adar,  # r16
+    "text_knn": q_text_knn,  # r16
+    "keep_best_dedup": q_keep_best_dedup,  # r16
+    "minhash_estimate": q_minhash_estimate,  # r16
+    "triangle_count": q_triangle_count,  # r16
+    "bit_prevalence": q_bit_prevalence,  # r16
+    "repetition_stats": q_repetition_stats,  # r16
+    "quality_rules": q_quality_rules,  # r16
+    "pii_scan": q_pii_scan,  # r16
+    "ann_ivf_topk": q_ann_ivf_topk,  # r16
+    "embed_neardup": q_embed_neardup,  # r16
+    "binary_dedup": q_binary_dedup,  # r16
+    "binary_profile": q_binary_profile,  # r16
+    "span_decontaminate": q_span_decontaminate,  # r16
+    "novelty_curve": q_novelty_curve,  # r16
+    "span_scrub": q_span_scrub,  # r16
+    "fuzzy_contamination": q_fuzzy_contamination,  # r16
+    "doc_chunks": q_doc_chunks,  # r16
+    "pack_sequences": q_pack_sequences,  # r16
+    "domain_mixture_sample": q_domain_mixture_sample,  # r16
+    "incremental_dedup": q_incremental_dedup,  # r16
+    "quality_classifier": q_quality_classifier,  # r16
+    "corpus_stats": q_corpus_stats,  # r16
+    "dataset_split": q_dataset_split,  # r16
+    "packed_texts": q_packed_texts,  # r16
+    "dedup_exact": q_dedup_exact,  # r16
+    "simhash": q_simhash,  # r16
+    "text_quality": q_text_quality,  # r16
+    "token_stats": q_token_stats,  # r16
+    "lang_id": q_lang_id,  # r16
+    "vocab_oov": q_vocab_oov,  # r16
+    "url_stats": q_url_stats,  # r16
+    "winnow_fingerprints": q_winnow_fingerprints,  # r16
+    "bloom_decontaminate": q_bloom_decontaminate,  # r16
 }
 
 ORACLES: dict[str, str] = {

@@ -347,8 +347,9 @@ def test_explode_gram_table_arrow_equals_hof_form(spark):
     the classer has: case mapping, the 512-char truncation boundary,
     every script block including the ones adjacent in code-point space
     (the lo-sorted searchsorted regression: Hangul Jamo is DECLARED after
-    CJK in _LANGID_BLOCKS but sits below it), digits, and NULL/empty/
-    1-char texts."""
+    CJK in _LANGID_BLOCKS but sits below it), digits, supplementary-plane
+    code points (emoji, U+20000, and an astral text crossing the
+    truncation), and NULL/empty/1-char texts."""
     from mine_database_spark.operators.quality import (
         explode_gram_table,
         explode_gram_table_arrow,
@@ -365,6 +366,9 @@ def test_explode_gram_table_arrow_equals_hof_form(spark):
         (8, "ᄀᇿ가힣㐀䶿", "k"),  # block boundaries
         (9, "ݐݿऀॿ", "m"),
         (10, "the quick brown fox jumps over the lazy dog", "en"),
+        (11, "😀👍🏽 ok", "e"),  # supplementary plane
+        (12, "𠀀", "c"),  # U+20000, CJK Ext B
+        (13, "x😀𠀀" * 200, "a"),  # astral across 512
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     a = sorted(
